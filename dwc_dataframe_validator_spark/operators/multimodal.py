@@ -28,7 +28,6 @@ import functools as _functools
 import hashlib
 import struct
 import zlib
-from typing import Iterator
 
 
 def _fixture_memo(key_fn):
@@ -55,9 +54,7 @@ def _fixture_memo(key_fn):
         return wrapper
     return deco
 
-from ..functions.payload_cache import payload_memo as _payload_memo
-
-import pandas as pd
+from ..functions.payload_cache import attach_blobs, map_payloads
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -176,34 +173,21 @@ def decode_images(
     elif backend == "auto":
         backend = "pil" if _pil_available() else "header"
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, 0, False))
-                    continue
-                if backend == "pil":
-                    w, h, ch, ok = _pil_decode(bytes(payload))
-                elif backend == "fake":
-                    w, h, ch = _fake_decode(bytes(payload))
-                    ok = True
-                else:
-                    mime, w, h, ch, _, ok = parse_media_header(
-                        bytes(payload)
-                    )
-                    # header backend: only image payloads decode ok —
-                    # a parseable WAV is still not an image
-                    ok = bool(ok) and (mime or "").startswith("image/")
-                    if not ok:
-                        w, h, ch = 0, 0, 0
-                rows.append((i, w, h, ch, ok))
-            yield pd.DataFrame(
-                rows, columns=["id", "width", "height", "channels", "ok"]
-            )
+    def tails(b: bytes):
+        if backend == "pil":
+            return (_pil_decode(b),)
+        if backend == "fake":
+            return ((*_fake_decode(b), True),)
+        mime, w, h, ch, _, ok = parse_media_header(b)
+        # header backend: only image payloads decode ok — a parseable
+        # WAV is still not an image
+        if ok and (mime or "").startswith("image/"):
+            return ((w, h, ch, True),)
+        return ((0, 0, 0, False),)
 
-    return df.select(F.col(id_col).alias(id_col), content_col).mapInPandas(
-        run, BLOB_META_SCHEMA
+    return map_payloads(
+        df, tails, BLOB_META_SCHEMA, (0, 0, 0, False), id_col, content_col,
+        memo=False,
     )
 
 
@@ -447,28 +431,9 @@ def decode_media_headers(
     O(1) header scan (JPEG segment walk is bounded by the header
     segments, not the payload), and the parquet reader only
     materializes the two selected columns."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (i, *parse_media_header(None if p is None else bytes(p)))
-                for i, p in zip(pdf[id_col], pdf[content_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "mime", "width", "height", "channels",
-                    "sample_rate", "ok",
-                ],
-            ).astype(
-                {
-                    "width": "Int32", "height": "Int32",
-                    "channels": "Int32", "sample_rate": "Int32",
-                }
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, HEADER_META_SCHEMA
+    return map_payloads(
+        df, lambda b: (parse_media_header(b),), HEADER_META_SCHEMA, _BAD,
+        id_col, content_col, memo=False,
     )
 
 
@@ -593,40 +558,14 @@ def build_media_blob_v2(doc_id: int) -> bytes:
 
 def attach_media_blob_v2(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the round-13 container-format header blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_media_blob_v2(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_media_blob_v2, id_col)
 
 
 def attach_media_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with REAL deterministic media bytes per id —
     the fixture generator for the codec-free decode path (production
     blobs come straight off a parquet binary column instead)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [build_media_blob(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_media_blob, id_col)
 
 
 def _video_backend_available() -> bool:
@@ -694,66 +633,54 @@ def sample_frames(
     schema and Arrow batching are identical on every branch."""
     use_video = not fake and _video_backend_available()
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[content_col]):
-                if payload is None:
-                    # null blob → zero frames, matching the null-tolerant
-                    # semantics of the other blob operators
-                    continue
-                b = bytes(payload)
-                if fake:
-                    n = 1 + (len(b) % max_frames)
-                    step = max(1, len(b) // n)
-                    for f_idx in range(n):
-                        rows.append((i, f_idx, b[f_idx * step : f_idx * step + 16]))
-                    continue
-                if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                    try:
-                        frames = avi_mjpeg_frames(b)
-                    except NotImplementedError:
-                        if not use_video:
-                            raise
-                        frames = None  # non-MJPG codec → imageio below
-                    else:
-                        if frames:
-                            n = min(max_frames, len(frames))
-                            step = max(1, len(frames) // n)
-                            rows.extend(
-                                (i, k, frames[k * step]) for k in range(n)
-                            )
-                        continue  # corrupt AVI → zero frames
-                if b[:6] in (b"GIF87a", b"GIF89a"):
-                    # animated GIF: codec-free composition; sampled
-                    # frames re-encoded as PNG bytes (lossless)
-                    gframes = gif_decode_frames(b)
-                    if gframes:
-                        n = min(max_frames, len(gframes))
-                        step = max(1, len(gframes) // n)
-                        rows.extend(
-                            (i, k, png_encode(gframes[k * step]))
-                            for k in range(n)
-                        )
-                        continue
-                    if not use_video:
-                        continue  # rejected GIF, no backend → 0 frames
-                    # a GIF the codec-free path rejects (>16 MP screen,
-                    # exotic variant) falls through to imageio below —
-                    # mirroring the AVI non-MJPG fallthrough
+    def tails(b: bytes):
+        if fake:
+            n = 1 + (len(b) % max_frames)
+            step = max(1, len(b) // n)
+            return tuple(
+                (f_idx, b[f_idx * step : f_idx * step + 16])
+                for f_idx in range(n)
+            )
+        if b[:4] == b"RIFF" and b[8:12] == b"AVI ":
+            try:
+                frames = avi_mjpeg_frames(b)
+            except NotImplementedError:
                 if not use_video:
-                    raise NotImplementedError(
-                        "video decoding beyond MJPEG-in-AVI requires "
-                        "imageio/pyav/ffmpeg (not installed); pass "
-                        "fake=True for the deterministic stub"
-                    )
-                rows.extend(
-                    (i, f_idx, fb) for f_idx, fb in _imageio_frames(b, max_frames)
+                    raise
+                frames = None  # non-MJPG codec → imageio below
+            else:
+                if not frames:
+                    return ()  # corrupt AVI → zero frames
+                n = min(max_frames, len(frames))
+                step = max(1, len(frames) // n)
+                return tuple((k, frames[k * step]) for k in range(n))
+        if b[:6] in (b"GIF87a", b"GIF89a"):
+            # animated GIF: codec-free composition; sampled frames
+            # re-encoded as PNG bytes (lossless)
+            gframes = gif_decode_frames(b)
+            if gframes:
+                n = min(max_frames, len(gframes))
+                step = max(1, len(gframes) // n)
+                return tuple(
+                    (k, png_encode(gframes[k * step])) for k in range(n)
                 )
-            yield pd.DataFrame(rows, columns=["id", "frame_idx", "frame_bytes"])
+            if not use_video:
+                return ()  # rejected GIF, no backend → 0 frames
+            # a GIF the codec-free path rejects (>16 MP screen, exotic
+            # variant) falls through to imageio below — mirroring the
+            # AVI non-MJPG fallthrough
+        if not use_video:
+            raise NotImplementedError(
+                "video decoding beyond MJPEG-in-AVI requires "
+                "imageio/pyav/ffmpeg (not installed); pass "
+                "fake=True for the deterministic stub"
+            )
+        return tuple(_imageio_frames(b, max_frames))
 
-    return df.select(F.col(id_col).alias(id_col), content_col).mapInPandas(
-        run, FRAME_SCHEMA
+    # a null blob yields zero frames, matching the null-tolerant
+    # semantics of the other blob operators
+    return map_payloads(
+        df, tails, FRAME_SCHEMA, None, id_col, content_col, memo=False
     )
 
 
@@ -1145,37 +1072,20 @@ def image_pixel_hashes(
     identical either way.  Map-side Arrow batch pipeline, no
     shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tail(b: bytes):
-            try:
-                px = decode_image_pixels(b, backend)
-            except NotImplementedError:
-                px = None  # pure backend JPEG-tier → flagged row
-            if px is None:
-                return (0, 0, 0, None, None, False)
-            h, w, ch = px.shape
-            return (w, h, ch, format(image_ahash(px), "016x"),
-                    format(image_dhash(px), "016x"), True)
+    def tails(b: bytes):
+        try:
+            px = decode_image_pixels(b, backend)
+        except NotImplementedError:
+            px = None  # pure backend JPEG-tier → flagged row
+        if px is None:
+            return ((0, 0, 0, None, None, False),)
+        h, w, ch = px.shape
+        return ((w, h, ch, format(image_ahash(px), "016x"),
+                 format(image_dhash(px), "016x"), True),)
 
-        tail = _payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            # the select below aliases id_col to "id" before the Arrow
-            # hop, so the batch frame always carries "id" regardless of
-            # the caller's column name
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, 0, None, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "width", "height", "channels",
-                         "ahash", "dhash", "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, IMAGE_HASH_SCHEMA
+    return map_payloads(
+        df, tails, IMAGE_HASH_SCHEMA, (0, 0, 0, None, None, False),
+        id_col, content_col,
     )
 
 
@@ -1256,33 +1166,19 @@ def resize_images(
     residual stub tiers yield ok=false rows with NULL content (never
     task failures)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tail(b: bytes):
-            try:
-                px = decode_image_pixels(b, backend)
-            except NotImplementedError:
-                px = None
-            if px is None:
-                return (0, 0, 0, None, False)
-            small = image_resize_pixels(px, out_w, out_h, mode)
-            return (out_w, out_h, small.shape[2], png_encode(small), True)
+    def tails(b: bytes):
+        try:
+            px = decode_image_pixels(b, backend)
+        except NotImplementedError:
+            px = None
+        if px is None:
+            return ((0, 0, 0, None, False),)
+        small = image_resize_pixels(px, out_w, out_h, mode)
+        return ((out_w, out_h, small.shape[2], png_encode(small), True),)
 
-        tail = _payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, 0, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "width", "height", "channels",
-                         "content", "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, RESIZE_SCHEMA
+    return map_payloads(
+        df, tails, RESIZE_SCHEMA, (0, 0, 0, None, False),
+        id_col, content_col,
     )
 
 
@@ -1664,19 +1560,7 @@ def attach_png_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with REAL deterministic PNG bytes per id — the
     fixture generator for the pixel-decode path (production blobs come
     straight off a parquet binary column instead)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [build_png_blob(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_png_blob, id_col)
 
 
 @_fixture_memo(lambda d: (d % 24, d % 17 == 0))
@@ -1696,21 +1580,7 @@ def build_png_i_blob(doc_id: int) -> bytes:
 
 def attach_png_i_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the Adam7-interlaced PNG fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_png_i_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_png_i_blob, id_col)
 
 
 #: shared palette for the RLE8 fixtures: i → (i, 3i % 256, 7i % 256)
@@ -1771,41 +1641,12 @@ def build_bmp_variant_blob(doc_id: int) -> bytes:
 
 def attach_bmp_variant_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the RLE4/bitfields BMP fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_bmp_variant_blob(int(i))
-                        for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_bmp_variant_blob, id_col)
 
 
 def attach_bmp_rle_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the RLE8 BMP fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_bmp_rle_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_bmp_rle_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -2365,40 +2206,12 @@ def build_ms_adpcm_blob(doc_id: int) -> bytes:
 
 def attach_ms_adpcm_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the MS-ADPCM WAV fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_ms_adpcm_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_ms_adpcm_blob, id_col)
 
 
 def attach_adpcm_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the IMA-ADPCM WAV fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_adpcm_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_adpcm_blob, id_col)
 
 
 def audio_pcm_metrics(arr) -> tuple:
@@ -2443,36 +2256,21 @@ def audio_pcm_features(
     malformed / null payloads → ok=false with zeroed features.
     Map-side Arrow batch pipeline, no shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tail(b: bytes):
-            try:
-                dec = wav_decode_samples(b)
-            except NotImplementedError:
-                dec = None  # float/compressed tier → flagged
-            if dec is None:
-                return (0, 0, 0, 0, 0, 0, 0, False)
-            rate, ch, arr = dec
-            n, peak, abs_sum, zc = audio_pcm_metrics(arr)
-            return (rate, ch, n, n * 1000 // rate, peak, abs_sum, zc,
-                    True)
+    def tails(b: bytes):
+        try:
+            dec = wav_decode_samples(b)
+        except NotImplementedError:
+            dec = None  # float/compressed tier → flagged
+        if dec is None:
+            return ((0, 0, 0, 0, 0, 0, 0, False),)
+        rate, ch, arr = dec
+        n, peak, abs_sum, zc = audio_pcm_metrics(arr)
+        return ((rate, ch, n, n * 1000 // rate, peak, abs_sum, zc,
+                 True),)
 
-        tail = _payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, 0, 0, 0, 0, 0, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "sample_rate", "n_channels", "n_frames",
-                         "duration_ms", "peak", "abs_sum",
-                         "zero_crossings", "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, AUDIO_FEATURE_SCHEMA
+    return map_payloads(
+        df, tails, AUDIO_FEATURE_SCHEMA, (0, 0, 0, 0, 0, 0, 0, False),
+        id_col, content_col,
     )
 
 
@@ -2540,19 +2338,7 @@ def build_wav_blob(doc_id: int) -> bytes:
 def attach_wav_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with REAL deterministic WAV bytes per id — the
     audio sibling of ``attach_png_blob``."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [build_wav_blob(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_wav_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -2608,21 +2394,7 @@ def _gif_anim_blob_cached(cls: int, trunc17: bool) -> bytes:
 
 def attach_gif_anim_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the animated-GIF fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_gif_anim_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_gif_anim_blob, id_col)
 
 
 @_fixture_memo(lambda d: (d % 16, d % 13 == 0, d % 17 == 0))
@@ -2673,21 +2445,7 @@ def build_wav_codec_blob(doc_id: int) -> bytes:
 
 def attach_wav_codec_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the WAV codec-tier fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_wav_codec_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_wav_codec_blob, id_col)
 
 
 def resample_pcm(arr, src_rate: int, dst_rate: int):
@@ -2738,35 +2496,21 @@ def resample_audio(
     re-encode.  One map-side Arrow pass; malformed payloads and the
     residual codec stubs yield ok=false rows with NULL content."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tail(b: bytes):
-            try:
-                dec = wav_decode_samples(b)
-            except NotImplementedError:
-                dec = None  # ADPCM/MP3-in-RIFF stub tier
-            if dec is None:
-                return (0, 0, 0, None, False)
-            rate, _ch, arr = dec
-            out = resample_pcm(arr, rate, dst_rate)
-            return (rate, dst_rate, out.shape[0],
-                    wav_encode(dst_rate, out), True)
+    def tails(b: bytes):
+        try:
+            dec = wav_decode_samples(b)
+        except NotImplementedError:
+            dec = None  # ADPCM/MP3-in-RIFF stub tier
+        if dec is None:
+            return ((0, 0, 0, None, False),)
+        rate, _ch, arr = dec
+        out = resample_pcm(arr, rate, dst_rate)
+        return ((rate, dst_rate, out.shape[0],
+                 wav_encode(dst_rate, out), True),)
 
-        tail = _payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, 0, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "src_rate", "dst_rate", "n_frames",
-                         "content", "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, RESAMPLE_SCHEMA
+    return map_payloads(
+        df, tails, RESAMPLE_SCHEMA, (0, 0, 0, None, False),
+        id_col, content_col,
     )
 
 
@@ -2810,33 +2554,20 @@ def audio_envelope_hashes(
     the image hashes).  Non-PCM16/malformed/null payloads → ok=false
     with NULL hash.  Map-side Arrow batch pipeline, no shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tail(b: bytes):
-            try:
-                dec = wav_decode_samples(b)
-            except NotImplementedError:
-                dec = None
-            if dec is None:
-                return (0, 0, None, False)
-            rate, _ch, arr = dec
-            return (rate, int(arr.shape[0]),
-                    format(audio_envelope_hash(arr), "016x"), True)
+    def tails(b: bytes):
+        try:
+            dec = wav_decode_samples(b)
+        except NotImplementedError:
+            dec = None
+        if dec is None:
+            return ((0, 0, None, False),)
+        rate, _ch, arr = dec
+        return ((rate, int(arr.shape[0]),
+                 format(audio_envelope_hash(arr), "016x"), True),)
 
-        tail = _payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "sample_rate", "n_frames", "ehash", "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, AUDIO_HASH_SCHEMA
+    return map_payloads(
+        df, tails, AUDIO_HASH_SCHEMA, (0, 0, None, False),
+        id_col, content_col,
     )
 
 
@@ -2913,21 +2644,7 @@ def build_wav_dedup_blob(doc_id: int) -> bytes:
 
 def attach_wav_dedup_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the dedup-fixture WAVs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_wav_dedup_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_wav_dedup_blob, id_col)
 
 
 def _g711_encode(arr, audio_fmt, np):
@@ -2988,40 +2705,27 @@ def audio_window_hashes(
     sub-window clips → one ok=false row.  Map-side Arrow batches, no
     shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tails(b: bytes):
-            try:
-                dec = wav_decode_samples(b)
-            except NotImplementedError:
-                dec = None
-            n_win = 0 if dec is None else \
-                int(dec[2].shape[0]) // window_frames
-            if n_win == 0:
-                return ((None, None, None, False),)
-            arr = dec[2]
-            return tuple(
-                (k, n_win,
-                 format(audio_envelope_hash(
-                     arr[k * window_frames:(k + 1) * window_frames]
-                 ), "016x"), True)
-                for k in range(n_win)
-            )
+    def tails(b: bytes):
+        try:
+            dec = wav_decode_samples(b)
+        except NotImplementedError:
+            dec = None
+        n_win = 0 if dec is None else \
+            int(dec[2].shape[0]) // window_frames
+        if n_win == 0:
+            return ((None, None, None, False),)
+        arr = dec[2]
+        return tuple(
+            (k, n_win,
+             format(audio_envelope_hash(
+                 arr[k * window_frames:(k + 1) * window_frames]
+             ), "016x"), True)
+            for k in range(n_win)
+        )
 
-        tails = _payload_memo(tails)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, None, False))
-                    continue
-                rows.extend((i, *t) for t in tails(bytes(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "win_idx", "n_windows", "whash", "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, AUDIO_WINDOW_SCHEMA
+    return map_payloads(
+        df, tails, AUDIO_WINDOW_SCHEMA, (None, None, None, False),
+        id_col, content_col,
     )
 
 
@@ -3099,21 +2803,7 @@ def build_wav_align_blob(doc_id: int) -> bytes:
 
 def attach_wav_align_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the alignment-fixture WAVs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_wav_align_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_wav_align_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -3564,19 +3254,7 @@ def build_gif_blob(doc_id: int) -> bytes:
 
 def attach_gif_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the GIF-decode fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [build_gif_blob(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_gif_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -4008,19 +3686,7 @@ def build_bmp_blob(doc_id: int) -> bytes:
 
 def attach_bmp_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the BMP-decode fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [build_bmp_blob(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_bmp_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -5083,21 +4749,7 @@ def _jpeg_blob_cached(cls: int, plant13: bool, trunc17: bool) -> bytes:
 
 def attach_jpeg_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the JPEG-decode fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_jpeg_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_jpeg_blob, id_col)
 
 
 def build_jpeg_prog_blob(doc_id: int) -> bytes:
@@ -5136,21 +4788,7 @@ def _jpeg_prog_blob_cached(cls: int, mode: int, trunc17: bool) -> bytes:
 def attach_jpeg_prog_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the progressive/restart JPEG fixture blobs
     per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_jpeg_prog_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_jpeg_prog_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -5384,41 +5022,27 @@ def video_frame_hashes(
     if backend not in ("auto", "pil", "pure"):
         raise ValueError(f"unknown pixel backend {backend!r}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tails(b: bytes):
-            pxs = _video_blob_frame_pixels(b, max_frames, backend)
-            if not pxs:
-                return ((None, None, 0, 0, None, None, False),)
-            n = len(pxs)
-            out = []
-            for k, px in enumerate(pxs):
-                if px is None:
-                    out.append((k, n, 0, 0, None, None, False))
-                    continue
-                h, w, _ch = px.shape
-                out.append(
-                    (k, n, w, h,
-                     format(image_ahash(px), "016x"),
-                     format(image_dhash(px), "016x"), True)
-                )
-            return tuple(out)
-
-        tails = _payload_memo(tails)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, 0, 0, None, None, False))
-                    continue
-                rows.extend((i, *t) for t in tails(bytes(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "frame_idx", "n_frames", "width", "height",
-                         "ahash", "dhash", "ok"],
+    def tails(b: bytes):
+        pxs = _video_blob_frame_pixels(b, max_frames, backend)
+        if not pxs:
+            return ((None, None, 0, 0, None, None, False),)
+        n = len(pxs)
+        out = []
+        for k, px in enumerate(pxs):
+            if px is None:
+                out.append((k, n, 0, 0, None, None, False))
+                continue
+            h, w, _ch = px.shape
+            out.append(
+                (k, n, w, h,
+                 format(image_ahash(px), "016x"),
+                 format(image_dhash(px), "016x"), True)
             )
+        return tuple(out)
 
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, VIDEO_FRAME_HASH_SCHEMA
+    return map_payloads(
+        df, tails, VIDEO_FRAME_HASH_SCHEMA,
+        (None, None, 0, 0, None, None, False), id_col, content_col,
     )
 
 
@@ -5621,21 +5245,7 @@ def _avi_trim_blob_cached(cls: int, variant: int, trunc: bool) -> bytes:
 
 def attach_avi_trim_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the alignment-tier AVI fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_avi_trim_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_avi_trim_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -6714,38 +6324,24 @@ def mp4_sample_hashes(
     ``mp4_byte_dedup``.  Map-side Arrow batches, no shuffle."""
     import hashlib as _hl
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tails(b: bytes):
-            ranges = media_sample_ranges(b)
-            if not ranges:
-                return ((None, None, None, False),)
-            n = min(max_samples, len(ranges))
-            step = max(1, len(ranges) // n)
-            return tuple(
-                (k, n,
-                 _hl.md5(_sample_bytes(b, ranges[k * step])).hexdigest(),
-                 True)
-                for k in range(n)
-            )
+    def tails(b: bytes):
+        ranges = media_sample_ranges(b)
+        if not ranges:
+            return ((None, None, None, False),)
+        n = min(max_samples, len(ranges))
+        step = max(1, len(ranges) // n)
+        return tuple(
+            (k, n,
+             _hl.md5(_sample_bytes(b, ranges[k * step])).hexdigest(),
+             True)
+            for k in range(n)
+        )
 
-        tails = _payload_memo(tails)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, None, False))
-                    continue
-                rows.extend((i, *t) for t in tails(bytes(payload)))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "sample_idx", "n_samples",
-                         "sample_hash", "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run,
+    return map_payloads(
+        df, tails,
         "id long, sample_idx int, n_samples int, "
         "sample_hash string, ok boolean",
+        (None, None, None, False), id_col, content_col,
     )
 
 
@@ -6865,40 +6461,12 @@ def _media_mux_blob_cached(cls: int, variant: int, trunc: bool) -> bytes:
 
 def attach_media_mux_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the cross-container fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_media_mux_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_media_mux_blob, id_col)
 
 
 def attach_mp4_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the MP4 byte-hash-tier fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_mp4_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_mp4_blob, id_col)
 
 
 @_fixture_memo(lambda d: (d % 12, d % 13 == 0, d % 17 == 0))
@@ -6987,40 +6555,12 @@ def attach_wav_mp3_blob(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, content) with the MP3-in-RIFF fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_wav_mp3_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_wav_mp3_blob, id_col)
 
 
 def attach_mp3_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the MP3 frame-hash-tier fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_mp3_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_mp3_blob, id_col)
 
 
 def _ogg_fixture_packet(j: int, seed_tag: bytes = b"oggp-") -> bytes:
@@ -7079,21 +6619,7 @@ def build_ogg_blob(doc_id: int) -> bytes:
 
 def attach_ogg_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the Ogg packet-hash-tier fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_ogg_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_ogg_blob, id_col)
 
 
 @_fixture_memo(lambda d: (d % 20, d % 13 == 0, d % 17 == 0))
@@ -7135,21 +6661,7 @@ def build_audio_mux_blob(doc_id: int) -> bytes:
 
 def attach_audio_mux_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the cross-container audio fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_audio_mux_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_audio_mux_blob, id_col)
 
 
 def _avi_fixture_frames(cls: int):
@@ -7204,21 +6716,7 @@ def _avi_blob_cached(cls: int, prog: bool, trunc: bool) -> bytes:
 
 def attach_avi_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the MJPEG-in-AVI fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_avi_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_avi_blob, id_col)
 
 
 def _xfmt_fixture_pixels(cls: int):
@@ -7266,18 +6764,9 @@ def _xfmt_blob_cached(cls: int, is_png: bool) -> bytes:
 def attach_xfmt_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """TWO rows per input id — (2·id, PNG blob) and (2·id+1, JPEG
     blob) of the same fixture frame."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf[id_col]:
-                rows.append((int(i) * 2, build_xfmt_blob(int(i) * 2)))
-                rows.append((int(i) * 2 + 1, build_xfmt_blob(int(i) * 2 + 1)))
-            yield pd.DataFrame(rows, columns=["id", "content"])
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    ids = F.col(id_col)
+    doubled = df.select(F.explode(F.array(ids * 2, ids * 2 + 1)).alias(id_col))
+    return attach_blobs(doubled, build_xfmt_blob, id_col)
 
 
 # ---- EXIF: TIFF metadata walk (JPEG APP1 + PNG eXIf) -----------------
@@ -7542,31 +7031,18 @@ def image_exif_meta(
     absent or its TIFF block is torn.  Map-side Arrow batches, no
     shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                meta = (
-                    exif_parse(bytes(payload))
-                    if payload is not None else None
-                )
-                if meta is None:
-                    rows.append((i, None, None, None, None, None,
-                                 False))
-                    continue
-                rows.append((
-                    i, meta.get("orientation"), meta.get("make"),
-                    meta.get("model"), meta.get("datetime"),
-                    meta.get("datetime_original"), True,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "orientation", "make", "model",
-                         "datetime", "datetime_original", "ok"],
-            )
+    bad = (None, None, None, None, None, False)
 
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, EXIF_META_SCHEMA
+    def tails(b: bytes):
+        meta = exif_parse(b)
+        if meta is None:
+            return (bad,)
+        return ((meta.get("orientation"), meta.get("make"),
+                 meta.get("model"), meta.get("datetime"),
+                 meta.get("datetime_original"), True),)
+
+    return map_payloads(
+        df, tails, EXIF_META_SCHEMA, bad, id_col, content_col, memo=False
     )
 
 
@@ -7584,36 +7060,21 @@ def image_oriented_hashes(
     re-exports.  Missing/torn EXIF defaults to orientation 1 per the
     spec; undecodable pixels flag ok=false."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tail(b: bytes):
-            try:
-                px = decode_image_pixels(b, backend)
-            except NotImplementedError:
-                px = None
-            if px is None:
-                return (None, None, False)
-            meta = exif_parse(b) or {}
-            px = orient_normalize(px, meta.get("orientation", 1))
-            return (
-                format(image_ahash(px), "016x"),
-                format(image_dhash(px), "016x"),
-                True,
-            )
+    def tails(b: bytes):
+        try:
+            px = decode_image_pixels(b, backend)
+        except NotImplementedError:
+            px = None
+        if px is None:
+            return ((None, None, False),)
+        meta = exif_parse(b) or {}
+        px = orient_normalize(px, meta.get("orientation", 1))
+        return ((format(image_ahash(px), "016x"),
+                 format(image_dhash(px), "016x"), True),)
 
-        tail = _payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows, columns=["id", "ahash", "dhash", "ok"]
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, "id long, ahash string, dhash string, ok boolean"
+    return map_payloads(
+        df, tails, "id long, ahash string, dhash string, ok boolean",
+        (None, None, False), id_col, content_col,
     )
 
 
@@ -7647,21 +7108,7 @@ def build_exif_jpeg_blob(doc_id: int) -> bytes:
 
 def attach_exif_jpeg_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the EXIF JPEG fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_exif_jpeg_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_exif_jpeg_blob, id_col)
 
 
 @_fixture_memo(lambda d: (d % 32, d % 17 == 0))
@@ -7696,21 +7143,7 @@ def build_exif_png_blob(doc_id: int) -> bytes:
 
 def attach_exif_png_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the orientation-packaging PNG fixtures."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_exif_png_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_exif_png_blob, id_col)
 
 
 # ---- ID3v2: MP3 tag metadata walk (the audio face of EXIF) ----------
@@ -7883,33 +7316,20 @@ def audio_id3_meta(
     when the tag is absent or torn.  Map-side Arrow batches, no
     shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                meta = (
-                    id3v2_frames(bytes(payload))
-                    if payload is not None else None
-                )
-                if meta is None:
-                    rows.append((i, None, None, None, None, None,
-                                 False))
-                    continue
-                rows.append((
-                    i, meta.get("title"), meta.get("artist"),
-                    meta.get("album"), meta.get("year"),
-                    meta.get("track"), True,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "title", "artist", "album", "year",
-                         "track", "ok"],
-            )
+    bad = (None, None, None, None, None, False)
 
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run,
+    def tails(b: bytes):
+        meta = id3v2_frames(b)
+        if meta is None:
+            return (bad,)
+        return ((meta.get("title"), meta.get("artist"), meta.get("album"),
+                 meta.get("year"), meta.get("track"), True),)
+
+    return map_payloads(
+        df, tails,
         "id long, title string, artist string, album string, "
         "year string, track string, ok boolean",
+        bad, id_col, content_col, memo=False,
     )
 
 
@@ -7945,21 +7365,7 @@ def build_id3_mp3_blob(doc_id: int) -> bytes:
 
 def attach_id3_mp3_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the ID3-tagged MP3 fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_id3_mp3_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_id3_mp3_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -8814,21 +8220,7 @@ def build_tiff_blob(doc_id: int) -> bytes:
 
 def attach_tiff_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the TIFF fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_tiff_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_tiff_blob, id_col)
 
 
 # --------------------------------------------------------------------------
@@ -9030,18 +8422,4 @@ def build_ico_blob(doc_id: int) -> bytes:
 
 def attach_ico_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the ICO fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_ico_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_ico_blob, id_col)

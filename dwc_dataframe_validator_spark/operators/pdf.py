@@ -61,6 +61,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.payload_cache import attach_blobs, map_payloads, payload_memo
+
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
 #: decompressed-bytes cap per stream and per document (text is small;
@@ -1685,9 +1687,7 @@ def pdf_text_from_ids(
     schema and rows as ``pdf_text(attach(df))``."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal import _payload_memo
-
-        tail = _payload_memo(lambda b: _pdf_text_tail(b, passwords))
+        tail = payload_memo(lambda b: _pdf_text_tail(b, passwords))
         for pdf_batch in batches:
             rows = [
                 (i, *tail(build(int(i)))) for i in pdf_batch[id_col]
@@ -1716,27 +1716,9 @@ def pdf_text(
     (the list broadcasts inside the UDF closure — keep it small).
     Map-side Arrow batches, no shuffle; nothing raises across the
     Arrow boundary."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .multimodal import _payload_memo
-
-        tail = _payload_memo(lambda b: _pdf_text_tail(b, passwords))
-        for pdf_batch in batches:
-            rows = []
-            for i, payload in zip(pdf_batch["id"],
-                                  pdf_batch[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, None, False, "torn"))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "n_pages", "n_chars", "text", "ok",
-                         "reason"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, PDF_TEXT_SCHEMA
+    return map_payloads(
+        df, lambda b: (_pdf_text_tail(b, passwords),), PDF_TEXT_SCHEMA,
+        (None, None, None, False, "torn"), id_col, content_col,
     )
 
 
@@ -1979,21 +1961,7 @@ def build_pdf_blob(doc_id: int) -> bytes:
 
 def attach_pdf_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the PDF fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf_batch[id_col],
-                    "content": [
-                        build_pdf_blob(int(i)) for i in pdf_batch[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_pdf_blob, id_col)
 
 
 # ---- embedded images: PDFs join cross-format image dedup -------------
@@ -2010,71 +1978,52 @@ def pdf_image_hashes(
     packagings.  A torn/encrypted document yields one flagged row;
     per-image stub tiers (CCITT/JBIG2/JPX, exotic colorspaces) flag
     that image only.  Map-side Arrow batches, no shuffle."""
-    from .multimodal import _payload_memo, image_ahash, image_dhash
+    from .multimodal import image_ahash, image_dhash
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def tails(b: bytes):
-            if b[:5] != b"%PDF-":
-                return ((0, 0, 0, 0, 0, None, None, False, "torn"),)
+    def tails(b: bytes):
+        if b[:5] != b"%PDF-":
+            return ((0, 0, 0, 0, 0, None, None, False, "torn"),)
+        try:
+            doc = PdfDoc(b)
+            pages = doc.pages()
+        except _Stub as e:
+            return ((0, 0, 0, 0, 0, None, None, False, str(e)),)
+        except (_Torn, RecursionError):
+            return ((0, 0, 0, 0, 0, None, None, False, "torn"),)
+        out = []
+        for pno, page in enumerate(pages):
             try:
-                doc = PdfDoc(b)
-                pages = doc.pages()
-            except _Stub as e:
-                return ((0, 0, 0, 0, 0, None, None, False, str(e)),)
-            except (_Torn, RecursionError):
-                return ((0, 0, 0, 0, 0, None, None, False, "torn"),)
-            out = []
-            for pno, page in enumerate(pages):
+                imgs = doc.page_images(page)
+            except (_Torn, _Stub, RecursionError):
+                out.append((pno, 0, 0, 0, 0, None, None,
+                            False, "torn"))
+                continue
+            for k, (_name, obj) in enumerate(imgs):
                 try:
-                    imgs = doc.page_images(page)
-                except (_Torn, _Stub, RecursionError):
-                    out.append((pno, 0, 0, 0, 0, None, None,
-                                False, "torn"))
+                    px = doc.image_pixels(obj)
+                except _Stub as e:
+                    out.append((pno, k, 0, 0, 0, None,
+                                None, False, str(e)))
                     continue
-                for k, (_name, obj) in enumerate(imgs):
-                    try:
-                        px = doc.image_pixels(obj)
-                    except _Stub as e:
-                        out.append((pno, k, 0, 0, 0, None,
-                                    None, False, str(e)))
-                        continue
-                    except (_Torn, RecursionError):
-                        out.append((pno, k, 0, 0, 0, None,
-                                    None, False, "torn"))
-                        continue
-                    h, w, c = px.shape
-                    out.append(
-                        (pno, k, w, h, c,
-                         format(image_ahash(px), "016x"),
-                         format(image_dhash(px), "016x"),
-                         True, None)
-                    )
-            return tuple(out)
-
-        tails = _payload_memo(tails)
-        for pdf_batch in batches:
-            rows = []
-            for i, payload in zip(pdf_batch["id"],
-                                  pdf_batch[content_col]):
-                if payload is None:
-                    rows.append((i, 0, 0, 0, 0, 0, None, None,
-                                 False, "torn"))
+                except (_Torn, RecursionError):
+                    out.append((pno, k, 0, 0, 0, None,
+                                None, False, "torn"))
                     continue
-                rows.extend(
-                    (i, *t) for t in tails(bytes(payload))
+                h, w, c = px.shape
+                out.append(
+                    (pno, k, w, h, c,
+                     format(image_ahash(px), "016x"),
+                     format(image_dhash(px), "016x"),
+                     True, None)
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "page", "img_idx", "width", "height",
-                         "channels", "ahash", "dhash", "ok",
-                         "reason"],
-            )
+        return tuple(out)
 
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run,
+    return map_payloads(
+        df, tails,
         "id long, page int, img_idx int, width int, height int, "
         "channels int, ahash string, dhash string, ok boolean, "
         "reason string",
+        (0, 0, 0, 0, 0, None, None, False, "torn"), id_col, content_col,
     )
 
 
@@ -2753,22 +2702,7 @@ def attach_pdf_cid_blob(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, content) with the composite-font PDF fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf_batch[id_col],
-                    "content": [
-                        build_pdf_cid_blob(int(i))
-                        for i in pdf_batch[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_pdf_cid_blob, id_col)
 
 
 #: the known candidate password for the scheme-7 fixture class —
@@ -2819,41 +2753,11 @@ def attach_pdf_encrypted_blob(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, content) with the encrypted-PDF fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf_batch[id_col],
-                    "content": [
-                        build_pdf_encrypted_blob(int(i))
-                        for i in pdf_batch[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_pdf_encrypted_blob, id_col)
 
 
 def attach_pdf_image_blob(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, content) with the PDF-embedded-image fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf_batch in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf_batch[id_col],
-                    "content": [
-                        build_pdf_image_blob(int(i))
-                        for i in pdf_batch[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_pdf_image_blob, id_col)

@@ -24,6 +24,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.payload_cache import (
+    _field_names,
+    attach_blobs,
+    map_payloads,
+)
+
 # Stopword alternations used for quality scoring and the language-ID
 # heuristic.  Tiny fixed sets — these are regex literals folded by
 # Catalyst's ConstantFolding, not data-side joins.
@@ -469,14 +475,22 @@ def fingerprint(
     )
 
 
-#: split-count memo for spread_small_scan, keyed on (scan files,
-#: parallelism).  The number of scan splits is a pure function of the
-#: input file set and the session's split configuration, so probing it
-#: once per distinct file set per driver is exact; this is PLAN
-#: metadata, never query results (every query still computes from the
-#: parquet inputs).  Bounded by the number of distinct table file sets
-#: a driver touches.
+#: split-count memo for spread_small_scan, keyed on the scan's file
+#: tuple, the parallelism and every setting that decides how files are
+#: split (``_SPLIT_CONFS``; None when unset).  The number of scan splits
+#: is a pure function of those, so probing it once per distinct key per
+#: driver is exact; this is PLAN metadata, never query results (every
+#: query still computes from the parquet inputs).  At most
+#: ``_SPLIT_COUNT_MEMO_MAX`` entries; the oldest is evicted first.
 _SPLIT_COUNT_MEMO: dict = {}
+_SPLIT_COUNT_MEMO_MAX = 64
+_SPLIT_CONFS = (
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionNum",
+    "spark.sql.leafNodeDefaultParallelism",
+)
 
 
 def spread_small_scan(df: DataFrame, key_col: str) -> DataFrame:
@@ -493,9 +507,9 @@ def spread_small_scan(df: DataFrame, key_col: str) -> DataFrame:
 
     r20 (r19 VERDICT note): the ``df.rdd.getNumPartitions()`` probe is
     a driver-side plan-to-RDD conversion (~50 ms per call) — it is now
-    memoized per (input file set, parallelism), since narrow
-    transforms preserve the scan's partition count and the split
-    count of a file set is fixed within a session.  Frames with no
+    memoized per (input files, parallelism, split settings), since
+    narrow transforms preserve the scan's partition count and the
+    split count of a file set is fixed by those.  Frames with no
     resolvable input files (in-memory relations) skip the memo —
     their partition counts are not keyed by anything stable."""
     if df.isStreaming:
@@ -506,11 +520,17 @@ def spread_small_scan(df: DataFrame, key_col: str) -> DataFrame:
         files = tuple(df.inputFiles())
     except Exception:  # pragma: no cover - defensive
         files = ()
-    key = (hash(files), par) if files else None
+    conf = df.sparkSession.conf
+    key = (
+        (files, par, *(conf.get(k, None) for k in _SPLIT_CONFS))
+        if files else None
+    )
     n = _SPLIT_COUNT_MEMO.get(key) if key is not None else None
     if n is None:
         n = df.rdd.getNumPartitions()
         if key is not None:
+            if len(_SPLIT_COUNT_MEMO) >= _SPLIT_COUNT_MEMO_MAX:
+                del _SPLIT_COUNT_MEMO[next(iter(_SPLIT_COUNT_MEMO))]
             _SPLIT_COUNT_MEMO[key] = n
     if n < max(2, par // 2):
         return df.repartition(par, F.col(key_col))
@@ -2389,23 +2409,8 @@ def attach_subtitle_text(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the subtitle fixture text — built with
     Catalyst ``transform``/``concat`` would be opaque; a tiny Arrow
     batch keeps the builder the readable twin of the parser."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_subtitle_text(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content string"
+    return attach_blobs(
+        df, build_subtitle_text, id_col, "id long, content string"
     )
 
 
@@ -2479,38 +2484,19 @@ def docx_text(
     (zip member walk + map-side extraction).  Map-side Arrow
     batches, no shuffle; torn/corrupt/missing-part payloads flag,
     never task failures."""
-    from typing import Iterator
 
-    import pandas as pd
+    def ex(b):
+        got = docx_extract(b)
+        if got is None:
+            return None
+        np_, text_s = got
+        return np_, len(text_s), text_s
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
-
-        def tail(b: bytes):
-            got = docx_extract(b)
-            if got is None:
-                return (None, None, None, False)
-            np_, text_s = got
-            return (np_, len(text_s), text_s, True)
-
-        tail = payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows,
-                columns=["id", "n_paragraphs", "n_chars", "text",
-                         "ok"],
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run,
+    return _office_text_face(
+        df, ex,
         "id long, n_paragraphs int, n_chars int, text string, "
         "ok boolean",
+        content_col, id_col,
     )
 
 
@@ -2587,24 +2573,7 @@ def build_docx_blob(doc_id: int) -> bytes:
 
 def attach_docx_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the DOCX fixture blobs."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_docx_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_docx_blob, id_col)
 
 
 # ---- XLSX / PPTX: the remaining office mass rides the zip source -----
@@ -2792,37 +2761,17 @@ def pptx_extract(b: bytes):
     return len(slides), "\n".join(lines)
 
 
-def _office_text_face(df, extract, out_cols, schema, content_col, id_col):
-    """Shared mapInPandas face for the office extractors — one
-    map-side Arrow projection, plants flag instead of failing."""
-    from typing import Iterator
+def _office_text_face(df, extract, schema, content_col, id_col):
+    """Shared face for the office extractors: ``extract(bytes)`` gives
+    the fields between id and ok, or None for a torn payload (plants
+    flag instead of failing)."""
+    bad = (None,) * (len(_field_names(schema)) - 2) + (False,)
 
-    import pandas as pd
+    def tails(b: bytes):
+        got = extract(b)
+        return (bad if got is None else got + (True,),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
-
-        bad = (None,) * (len(out_cols) - 2) + (False,)
-
-        def tail(b: bytes):
-            got = extract(b)
-            if got is None:
-                return bad
-            return got + (True,)
-
-        tail = payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, *bad))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(rows, columns=out_cols)
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, schema
-    )
+    return map_payloads(df, tails, schema, bad, id_col, content_col)
 
 
 def xlsx_text(
@@ -2839,7 +2788,6 @@ def xlsx_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "n_sheets", "n_cells", "n_chars", "text", "ok"],
         "id long, n_sheets int, n_cells int, n_chars int, "
         "text string, ok boolean",
         content_col, id_col,
@@ -2860,7 +2808,6 @@ def pptx_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "n_slides", "n_chars", "text", "ok"],
         "id long, n_slides int, n_chars int, text string, ok boolean",
         content_col, id_col,
     )
@@ -3056,33 +3003,14 @@ def build_pptx_blob(doc_id: int) -> bytes:
     return blob
 
 
-def _attach_office_blob(df: DataFrame, build, id_col: str) -> DataFrame:
-    from typing import Iterator
-
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [build(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
-
-
 def attach_xlsx_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the XLSX fixture blobs."""
-    return _attach_office_blob(df, build_xlsx_blob, id_col)
+    return attach_blobs(df, build_xlsx_blob, id_col)
 
 
 def attach_pptx_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the PPTX fixture blobs."""
-    return _attach_office_blob(df, build_pptx_blob, id_col)
+    return attach_blobs(df, build_pptx_blob, id_col)
 
 
 # ---- EPUB / RTF: the remaining document-container text mass ----------
@@ -3186,7 +3114,6 @@ def epub_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "n_chapters", "n_chars", "text", "ok"],
         "id long, n_chapters int, n_chars int, text string, "
         "ok boolean",
         content_col, id_col,
@@ -3271,7 +3198,7 @@ def build_epub_blob(doc_id: int) -> bytes:
 
 def attach_epub_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the EPUB fixture blobs."""
-    return _attach_office_blob(df, build_epub_blob, id_col)
+    return attach_blobs(df, build_epub_blob, id_col)
 
 
 _RTF_SKIP_DESTS = frozenset((
@@ -3459,7 +3386,6 @@ def rtf_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "n_paragraphs", "n_chars", "text", "ok"],
         "id long, n_paragraphs int, n_chars int, text string, "
         "ok boolean",
         content_col, id_col,
@@ -3529,7 +3455,7 @@ def build_rtf_blob(doc_id: int) -> bytes:
 
 def attach_rtf_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the RTF fixture blobs."""
-    return _attach_office_blob(df, build_rtf_blob, id_col)
+    return attach_blobs(df, build_rtf_blob, id_col)
 
 
 # ---- EML: RFC 822 / MIME mail — mail corpora are core training mass --
@@ -3683,8 +3609,6 @@ def eml_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "subject", "sender", "n_parts", "n_chars", "text",
-         "ok"],
         "id long, subject string, sender string, n_parts int, "
         "n_chars int, text string, ok boolean",
         content_col, id_col,
@@ -3800,7 +3724,7 @@ def build_eml_blob(doc_id: int) -> bytes:
 
 def attach_eml_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the EML fixture blobs."""
-    return _attach_office_blob(df, build_eml_blob, id_col)
+    return attach_blobs(df, build_eml_blob, id_col)
 
 
 # ---- ODF: OpenDocument text / spreadsheet / presentation ------------
@@ -4010,7 +3934,6 @@ def odf_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "kind", "n_units", "n_chars", "text", "ok"],
         "id long, kind string, n_units int, n_chars int, "
         "text string, ok boolean",
         content_col, id_col,
@@ -4141,7 +4064,7 @@ def build_odf_blob(doc_id: int) -> bytes:
 
 def attach_odf_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the ODF fixture blobs."""
-    return _attach_office_blob(df, build_odf_blob, id_col)
+    return attach_blobs(df, build_odf_blob, id_col)
 
 
 # ---- mbox: the mailbox container over the EML extractor -------------
@@ -4222,7 +4145,6 @@ def mbox_text(
 
     return _office_text_face(
         df, ex,
-        ["id", "n_messages", "n_chars", "text", "ok"],
         "id long, n_messages int, n_chars int, text string, "
         "ok boolean",
         content_col, id_col,
@@ -4269,4 +4191,4 @@ def build_mbox_blob(doc_id: int) -> bytes:
 
 def attach_mbox_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the mbox fixture blobs."""
-    return _attach_office_blob(df, build_mbox_blob, id_col)
+    return attach_blobs(df, build_mbox_blob, id_col)

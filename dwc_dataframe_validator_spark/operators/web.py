@@ -695,6 +695,29 @@ def html_paragraphs(html: Column) -> Column:
     return F.split(t, _PARA_SEP)
 
 
+#: columns ``justext_paragraphs`` builds; a ``carry`` name equal to one
+#: of them (or to ``id_col``) would be shadowed or duplicated
+_JUSTEXT_COLS = frozenset((
+    "_pi", "_chunk", "para_text", "n_links", "n_chars", "n_words",
+    "n_stop", "cf_class", "para_pos", "_c2", "final_class",
+))
+#: plus the columns ``wet_main_content`` aggregates into
+_WET_COLS = _JUSTEXT_COLS | {
+    "_mt", "main_text", "n_paras_total", "n_paras_good", "n_chars_main",
+}
+
+
+def _check_carry(carry: tuple, id_col: str, taken: frozenset) -> None:
+    """Raise ValueError when a ``carry`` name collides with ``id_col``
+    or an internal column (Spark resolves names case-insensitively)."""
+    taken = taken | {id_col.lower()}
+    clash = sorted(c for c in carry if c.lower() in taken)
+    if clash:
+        raise ValueError(
+            f"carry names {clash} collide with id_col or an internal column"
+        )
+
+
 def justext_paragraphs(
     df: DataFrame,
     payload_col: str = "payload_text",
@@ -710,7 +733,9 @@ def justext_paragraphs(
     the windows without affecting partitioning or classes (r20 opt:
     lets ``crawl_survivors`` keep the URL alongside the text instead
     of joining back through a second evaluation of the Python decode
-    lineage; default () is the historical shape).
+    lineage; default () is the historical shape).  A carry name equal
+    to ``id_col`` or to a column this function builds raises
+    ``ValueError``.
 
     Context-free class:
       - ``bad``       link density > 20 % (5·links > words)
@@ -744,6 +769,7 @@ def justext_paragraphs(
 
     Both steps ride ONE exchange+sort (every window shares the
     doc-id partitioning and paragraph order)."""
+    _check_carry(carry, id_col, _JUSTEXT_COLS)
     p = F.col(payload_col)
     status = http_status(p)
     ctype = http_header(p, "content-type")
@@ -871,6 +897,7 @@ def wet_main_content(
     id — see ``justext_paragraphs``) become extra groupBy keys and
     output columns after ``id_col``: same groups, since each id has
     exactly one carry tuple."""
+    _check_carry(carry, id_col, _WET_COLS)
     paras = justext_paragraphs(df, payload_col, id_col, carry=carry)
     good = F.col("final_class") == "good"
     agg = paras.groupBy(id_col, *carry).agg(

@@ -58,7 +58,8 @@ except ImportError:  # pragma: no cover
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..functions.payload_cache import attach_blobs, map_payloads
 
 WARC_RECORD_SCHEMA = (
     "path string, record_index long, warc_type string, "
@@ -307,44 +308,24 @@ def decode_warc_records(
         "payload binary, ok boolean"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
+    bad = (None, None, None, None, None, None, False)
 
-        bad = (None, None, None, None, None, None, False)
+    def tails(b: bytes):
+        if b[:2] == _GZIP_MAGIC:
+            try:
+                b = gzip.decompress(b)
+            except OSError:
+                return (bad,)
+        h, payload, _ = parse_warc_member(b)
+        if h is None:
+            return (bad,)
+        dec = lambda k: (  # noqa: E731
+            h.get(k, b"").decode("utf-8", "replace") or None
+        )
+        return ((dec(_H_TYPE), dec(_H_URI), dec(_H_DATE),
+                 dec(_H_CTYPE), len(payload), payload, True),)
 
-        def tail(b: bytes):
-            if b[:2] == _GZIP_MAGIC:
-                try:
-                    b = gzip.decompress(b)
-                except OSError:
-                    return bad
-            h, payload, _ = parse_warc_member(b)
-            if h is None:
-                return bad
-            dec = lambda k: (  # noqa: E731
-                h.get(k, b"").decode("utf-8", "replace") or None
-            )
-            return (dec(_H_TYPE), dec(_H_URI), dec(_H_DATE),
-                    dec(_H_CTYPE), len(payload), payload, True)
-
-        tail = payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                if blob is None:
-                    rows.append((i, *bad))
-                    continue
-                rows.append((i, *tail(bytes(blob))))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "warc_type", "target_uri", "warc_date",
-                         "content_type", "content_length", "payload",
-                         "ok"],
-            )
-
-    return df.select(
-        df[id_col].alias(id_col), df[content_col].alias(content_col)
-    ).mapInPandas(run, out_schema)
+    return map_payloads(df, tails, out_schema, bad, id_col, content_col)
 
 
 def decode_warc_records_text(
@@ -376,47 +357,26 @@ def decode_warc_records_text(
         "ok boolean"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
+    bad = (None, None, None, None, None, None, None, False)
 
-        bad = (None, None, None, None, None, None, None, False)
+    def tails(b: bytes):
+        if b[:2] == _GZIP_MAGIC:
+            try:
+                b = gzip.decompress(b)
+            except OSError:
+                return (bad,)
+        h, payload, _ = parse_warc_member(b)
+        if h is None:
+            return (bad,)
+        uri = (
+            h.get(_H_URI, b"").decode("utf-8", "replace") or None
+        )
+        text, enc, source, ce, chunked, decoded = (
+            decode_payload_full(payload)
+        )
+        return ((uri, enc, source, ce, chunked, decoded, text, True),)
 
-        def tail(b: bytes):
-            if b[:2] == _GZIP_MAGIC:
-                try:
-                    b = gzip.decompress(b)
-                except OSError:
-                    return bad
-            h, payload, _ = parse_warc_member(b)
-            if h is None:
-                return bad
-            uri = (
-                h.get(_H_URI, b"").decode("utf-8", "replace") or None
-            )
-            text, enc, source, ce, chunked, decoded = (
-                decode_payload_full(payload)
-            )
-            return (uri, enc, source, ce, chunked, decoded, text, True)
-
-        tail = payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[content_col]):
-                if blob is None:
-                    rows.append((i, *bad))
-                    continue
-                rows.append((i, *tail(bytes(blob))))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "target_uri", "encoding",
-                         "encoding_source", "content_encoding",
-                         "chunked", "body_decoded", "payload_text",
-                         "ok"],
-            )
-
-    return df.select(
-        df[id_col].alias(id_col), df[content_col].alias(content_col)
-    ).mapInPandas(run, out_schema)
+    return map_payloads(df, tails, out_schema, bad, id_col, content_col)
 
 
 #: WHATWG-style charset label normalization (the bounded subset a
@@ -1642,33 +1602,13 @@ def decode_warc_payload_text(
         "payload_text string"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
+    def tails(b: bytes):
+        text, enc, source, ce, chunked, decoded = decode_payload_full(b)
+        return ((enc, source, ce, chunked, decoded, text),)
 
-        def tail(b: bytes):
-            text, enc, source, ce, chunked, decoded = (
-                decode_payload_full(b)
-            )
-            return (enc, source, ce, chunked, decoded, text)
-
-        tail = payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, blob in zip(pdf[id_col], pdf[payload_col]):
-                if blob is None:
-                    rows.append((i, None, None, None, None, None, None))
-                    continue
-                rows.append((i, *tail(bytes(blob))))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "encoding", "encoding_source",
-                         "content_encoding", "chunked", "body_decoded",
-                         "payload_text"],
-            )
-
-    return df.select(
-        df[id_col].alias(id_col), df[payload_col].alias(payload_col)
-    ).mapInPandas(run, out_schema)
+    return map_payloads(
+        df, tails, out_schema, (None,) * 6, id_col, payload_col
+    )
 
 
 def build_warc_record(
@@ -1983,59 +1923,22 @@ def attach_content_encoding_blob(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, payload) with the br/zstd fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "payload": [
-                        build_content_encoding_blob(int(i))
-                        for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(df[id_col].alias(id_col)).mapInPandas(
-        run, "id long, payload binary"
+    return attach_blobs(
+        df, build_content_encoding_blob, id_col, "id long, payload binary"
     )
 
 
 def attach_encoded_http_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, payload) with the wire-decode fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "payload": [
-                        build_encoded_http_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(df[id_col].alias(id_col)).mapInPandas(
-        run, "id long, payload binary"
+    return attach_blobs(
+        df, build_encoded_http_blob, id_col, "id long, payload binary"
     )
 
 
 def attach_charset_http_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, payload) with the charset-decode fixture blobs per id."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "payload": [
-                        build_charset_http_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(df[id_col].alias(id_col)).mapInPandas(
-        run, "id long, payload binary"
+    return attach_blobs(
+        df, build_charset_http_blob, id_col, "id long, payload binary"
     )
 
 
@@ -2172,51 +2075,20 @@ def zstd_dict_decode(
     """(id, n_bytes, text, ok) decoding each frame against the
     SUPPLIED dictionary via the pure tier — map-side Arrow, the
     storage-dictionary twin of the wire decode face."""
-    from typing import Iterator
+    zd = _zstd_parse_dictionary(dictionary)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
+    def tails(b: bytes):
+        got = _zstd_decode_pure(b, zd)
+        if got is None:
+            return ((None, None, False),)
+        return ((len(got), got.decode("utf-8", "replace"), True),)
 
-        zd = _zstd_parse_dictionary(dictionary)
-
-        def tail(b: bytes):
-            got = _zstd_decode_pure(b, zd)
-            if got is None:
-                return (None, None, False)
-            return (len(got), got.decode("utf-8", "replace"), True)
-
-        tail = payload_memo(tail)
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[content_col]):
-                if payload is None:
-                    rows.append((i, None, None, False))
-                    continue
-                rows.append((i, *tail(bytes(payload))))
-            yield pd.DataFrame(
-                rows, columns=["id", "n_bytes", "text", "ok"]
-            )
-
-    return df.select(F.col(id_col).alias("id"), content_col).mapInPandas(
-        run, "id long, n_bytes int, text string, ok boolean"
+    return map_payloads(
+        df, tails, "id long, n_bytes int, text string, ok boolean",
+        (None, None, False), id_col, content_col,
     )
 
 
 def attach_zstd_dict_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the dictionary-zstd fixture frames."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_zstd_dict_blob(int(i))
-                        for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_zstd_dict_blob, id_col)

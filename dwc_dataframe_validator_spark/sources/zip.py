@@ -42,8 +42,8 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from ..functions.payload_cache import attach_blobs, map_payloads
 from .tar import _MAX_MEMBER, _MAX_SHARD, TAR_MEMBER_SCHEMA, wds_key_ext
 
 #: same member-row shape as the tar source, so ``webdataset_samples``
@@ -189,29 +189,13 @@ def decode_zip_records(
         "key string, ext string, size long, content binary, ok boolean"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.payload_cache import payload_memo
+    def tails(raw: bytes):
+        return tuple(t[1:] for t in _member_rows(None, raw, max_payload))
 
-        tails = payload_memo(
-            lambda raw: tuple(
-                t[1:] for t in _member_rows(None, raw, max_payload)
-            )
-        )
-        for pdf in batches:
-            rows = []
-            for i, raw in zip(pdf[id_col], pdf[content_col]):
-                if raw is None:
-                    rows.append((i, 0, None, None, None, None, None,
-                                 False))
-                    continue
-                rows.extend((i, *t) for t in tails(raw))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "member_index", "member_name", "key",
-                         "ext", "size", "content", "ok"],
-            )
-
-    return df.select(id_col, content_col).mapInPandas(run, out_schema)
+    return map_payloads(
+        df, tails, out_schema, (0, None, None, None, None, None, False),
+        id_col, content_col,
+    )
 
 
 def zip_encode(members: list, deflate: bool = False) -> bytes:
@@ -282,18 +266,4 @@ def build_zip_blob(doc_id: int) -> bytes:
 
 def attach_zip_blob(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, content) with the zip shard fixture blobs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "content": [
-                        build_zip_blob(int(i)) for i in pdf[id_col]
-                    ],
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col)).mapInPandas(
-        run, "id long, content binary"
-    )
+    return attach_blobs(df, build_zip_blob, id_col)

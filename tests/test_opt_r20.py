@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
+
 from dwc_dataframe_validator_spark.functions.payload_cache import (
     _approx_bytes,
     payload_memo,
@@ -90,6 +92,22 @@ def test_byte_budget_resets_cache():
         assert memo(p) == big
     assert len(calls) > len(payloads)  # some resets really happened
     assert all(c in payloads for c in calls)
+
+
+def test_oversize_value_is_returned_uncached_and_keeps_entries():
+    calls = []
+
+    def decode(b: bytes):
+        calls.append(bytes(b))
+        return b * 4096 if b == b"big" else b
+
+    memo = payload_memo(decode, max_bytes=1024)
+    assert memo(b"a") == b"a"
+    assert memo(b"big") == b"big" * 4096  # ~12 KB, over the budget
+    assert memo(b"big") == b"big" * 4096  # correct again, not cached
+    assert memo(b"c") == b"c"  # the next miss must not flush the cache
+    assert memo(b"a") == b"a"
+    assert calls == [b"a", b"big", b"big", b"c"]
 
 
 def test_approx_bytes_counts_nested_tails():
@@ -199,3 +217,67 @@ def test_wet_main_content_carry_rides_unchanged(spark):
         assert r["url"] == urls[i]
         assert (r["main_text"], r["n_paras_total"], r["n_paras_good"],
                 r["n_chars_main"]) == plain[i]
+
+
+@pytest.mark.parametrize(
+    "carry", [("doc_id",), ("para_text",), ("N_STOP",), ("final_class",)]
+)
+def test_justext_carry_rejects_colliding_names(spark, carry):
+    from dwc_dataframe_validator_spark.operators import web
+
+    df = spark.createDataFrame(
+        [(1, "x", "y", "z", "w", "v")],
+        "doc_id long, payload_text string, para_text string, "
+        "N_STOP string, final_class string, main_text string",
+    )
+    with pytest.raises(ValueError, match="collide"):
+        web.justext_paragraphs(df, carry=carry)
+    with pytest.raises(ValueError, match="collide"):
+        web.wet_main_content(df, carry=carry)
+
+
+def test_wet_main_content_carry_rejects_its_output_names(spark):
+    from dwc_dataframe_validator_spark.operators import web
+
+    df = spark.createDataFrame(
+        [(1, "x", "m")], "doc_id long, payload_text string, main_text string"
+    )
+    web.justext_paragraphs(df, carry=("main_text",))  # not a justext column
+    with pytest.raises(ValueError, match="collide"):
+        web.wet_main_content(df, carry=("main_text",))
+
+
+def test_split_count_memo_keys_on_split_config_and_is_bounded(
+    spark, tmp_path, monkeypatch
+):
+    from dwc_dataframe_validator_spark.operators import text
+
+    path = str(tmp_path / "scan")
+    spark.range(20000).selectExpr(
+        "id", "sha2(cast(id AS string), 256) AS s"
+    ).coalesce(1).write.parquet(path)
+
+    def scan():
+        # a fresh frame per probe: DataFrame.rdd is cached per object
+        return spark.read.parquet(path)
+
+    memo: dict = {}
+    monkeypatch.setattr(text, "_SPLIT_COUNT_MEMO", memo)
+    conf = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(conf)
+    try:
+        text.spread_small_scan(scan(), "id")
+        assert len(memo) == 1
+        spark.conf.set(conf, "64k")
+        text.spread_small_scan(scan(), "id")  # same files, new split size
+        assert len(memo) == 2  # probed again, not served stale
+        n = scan().rdd.getNumPartitions()
+        assert n > 1 and sorted(memo.values()) == [1, n]
+
+        monkeypatch.setattr(text, "_SPLIT_COUNT_MEMO_MAX", 2)
+        for size in ("96k", "128k", "160k"):
+            spark.conf.set(conf, size)
+            text.spread_small_scan(scan(), "id")
+            assert len(memo) <= 2
+    finally:
+        spark.conf.set(conf, old)
